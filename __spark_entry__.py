@@ -377,7 +377,6 @@ def _kg_wholedoc(spark: SparkSession, sf_dir: str, linked: bool) -> dict:
             spark, pages,
             precomputed_labels=_labels_for(spark) if linked else None,
             chunk_size=1_000_000_000, chunk_overlap=0,
-            persist_records=True,
         )
         cached = {
             "triples": out["triples"].localCheckpoint(eager=True),
@@ -1443,7 +1442,7 @@ def _kg_nodes_edges(spark: SparkSession, sf_dir: str):
     pages = _pages_for(spark, sf_dir)
     out = run_kg_pipeline(
         spark, pages, precomputed_labels=_labels_for(spark),
-        chunk_size=512, chunk_overlap=64, persist_records=True,
+        chunk_size=512, chunk_overlap=64,
         fused=True,  # one Python hop — identical records, ~2x cold build
     )
     # materialize: downstream probe/partition stages (and the CC

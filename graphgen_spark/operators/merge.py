@@ -82,13 +82,6 @@ def summarize_if_long_udf(description: pd.Series) -> pd.Series:
     return description.map(gate)
 
 
-@pandas_udf(T.IntegerType())
-def _tok_len_udf(text: pd.Series) -> pd.Series:
-    from graphgen_spark.textkit import count_tokens
-
-    return text.map(lambda t: count_tokens(t or "")).astype("int32")
-
-
 # Native (whole-stage-codegen) summary gate.  The textkit token regex
 # is Java-compatible; (?U) makes Java's \s match unicode whitespace
 # like Python's.  Truncation to the first K tokens = the prefix ending

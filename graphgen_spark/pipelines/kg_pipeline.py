@@ -3,12 +3,13 @@
 pages(url, warc_ts, html, text, lang)
   -> extract_text (Arrow UDF, byte-identical per url)
   -> chunk (mapInPandas, splitter parity)            [repartition url-hash]
-  -> extract records (mock-LLM grammar + parser)
+  -> extract records (mock-LLM grammar + parser)     [persisted]
   -> entities / relations (projections)
   -> canonicalize (alias-dict broadcast link + CC labels)
   -> merge_nodes / merge_edges (hash aggregates)     [shuffle by entity]
   -> triples + coverage stats
 
+``run_kg_pipeline`` extracts once, caching records while its result lives.
 Mirrors the reference flagship config
 (``examples/generate/generate_aggregated_qa/aggregated_config.yaml``)
 but with the graph in the dataflow instead of a storage actor.
@@ -16,8 +17,11 @@ but with the graph in the dataflow instead of a storage actor.
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from graphgen_spark.operators.chunking import chunk_documents
 from graphgen_spark.operators.components import connected_components
@@ -196,6 +200,12 @@ class _LazyFrames(dict):
         return super().items()
 
 
+def _release(records: DataFrame) -> None:
+    """Unpersist unless the session was stopped (the cache went too)."""
+    if records.sparkSession.sparkContext._jsc is not None:
+        records.unpersist()
+
+
 def run_mixed_kg_pipeline(
     spark: SparkSession,
     docs: DataFrame,
@@ -244,7 +254,6 @@ def run_kg_pipeline(
     verify_text_invariant: bool = False,
     precomputed_labels: DataFrame | None = None,
     fused: bool = False,
-    persist_records: bool = False,
     label_map_max_rows: int = 2_000_000,
 ) -> dict[str, DataFrame]:
     """Run the full spine; returns the named intermediate + final
@@ -256,15 +265,11 @@ def run_kg_pipeline(
     frames are still returned (built lazily from the composable ops)
     but the triples/nodes/edges path does not execute them.
 
-    ``persist_records=True`` caches the records table
-    (MEMORY_AND_DISK). The nodes and edges plans each reference
-    records on several DAG branches (entity agg + salt-count,
-    relation agg + two endpoint semi-joins), so a caller that
-    materializes more than one output would otherwise re-run the
-    Python extraction per branch — ~6 scans in the edges plan alone.
-    Single-output callers (triples only) should leave it off; the
-    checkpointed production pipeline gets the same effect by landing
-    records as a stage table.
+    Records are persisted (MEMORY_AND_DISK): triples, nodes and edges
+    read them on several plan branches that would each re-run the
+    Python extraction.  The cache lives as long as the returned
+    mapping, so no later call reads it; frames kept beyond the
+    mapping recompute the extraction.
     """
     # repartition by url hash: extraction cost is ~uniform per doc and
     # this keeps hot-host pages from skewing a single input split.
@@ -354,10 +359,7 @@ def run_kg_pipeline(
         docs_built = _build_docs()
         chunks_built = _build_chunks(docs_built)
         records = extract_records(chunks_built)
-    if persist_records:
-        from pyspark.storagelevel import StorageLevel
-
-        records = records.persist(StorageLevel.MEMORY_AND_DISK)
+    records = records.persist(StorageLevel.MEMORY_AND_DISK)
     entities = entities_from_records(records)
     relations = relations_from_records(records)
 
@@ -395,13 +397,17 @@ def run_kg_pipeline(
         return merge_nodes(entities_c)
 
     def _edges():
-        return merge_edges(relations_c, _out["nodes"])
+        # the distinct entity names ARE the node set (merge_nodes
+        # inner-joins two aggregates keyed on the same names), and
+        # finalize_edges reads only the names: no second merge_nodes
+        names = entities_c.select("entity_name").distinct()
+        return merge_edges(relations_c, names)
 
     def _docs():
         return _build_docs()
 
-    def _chunks():
-        return _build_chunks(_out["docs"])
+    def _chunks():  # no reference to `out`: a cycle delays its release
+        return _build_chunks(_build_docs())
 
     eager = {
         "records": records,
@@ -414,5 +420,6 @@ def run_kg_pipeline(
         lazy.update({"docs": _docs, "chunks": _chunks})
     else:
         eager.update({"docs": docs_built, "chunks": chunks_built})
-    _out = _LazyFrames(eager, lazy)
-    return _out
+    out = _LazyFrames(eager, lazy)
+    weakref.finalize(out, _release, records).atexit = False  # JVM may be gone
+    return out
