@@ -34,7 +34,6 @@ def checkpoint_stage(
     root: str,
     stage: str,
     key_cols: list[str],
-    partition_by: str | None = None,
 ) -> DataFrame:
     """Insert-only upsert of ``df`` into the stage table; returns the
     full materialized stage (previous + new rows).
@@ -43,19 +42,15 @@ def checkpoint_stage(
     - resume: left-anti join on ``key_cols`` → append only new rows
     """
     path = os.path.join(root, stage)
+    # reads pass df's schema: without one Spark runs a footer-reading
+    # job per read to infer it
     if _exists(spark, path):
-        done_keys = spark.read.parquet(path).select(*key_cols)
-        new_rows = df.join(done_keys, key_cols, "left_anti")
-        writer = new_rows.write.mode("append")
-        if partition_by:
-            writer = writer.partitionBy(partition_by)
-        writer.parquet(path)
+        done_keys = spark.read.schema(df.schema).parquet(path)
+        new_rows = df.join(done_keys.select(*key_cols), key_cols, "left_anti")
+        new_rows.write.mode("append").parquet(path)
     else:
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(partition_by)
-        writer.parquet(path)
-    result = spark.read.parquet(path)
+        df.write.mode("overwrite").parquet(path)
+    result = spark.read.schema(df.schema).parquet(path)
     _record_metrics(spark, result, root, stage)
     return result
 
@@ -94,11 +89,20 @@ def lineage_edges(
 
 
 def append_lineage(
-    spark: SparkSession, lineage: DataFrame, root: str
+    spark: SparkSession, lineage: DataFrame, root: str, op: str
 ) -> None:
-    lineage.write.mode("append").partitionBy("op").parquet(
-        os.path.join(root, "lineage")
-    )
+    """Insert-only append to one op's lineage partition: rows already
+    there are skipped, so a rerun after a kill neither loses nor
+    duplicates any."""
+    path = os.path.join(root, "lineage", f"op={op}")
+    rows = lineage.where(F.col("op") == op).drop("op")
+    if _exists(spark, path):
+        rows = rows.join(
+            spark.read.schema(rows.schema).parquet(path),
+            ["src_id", "dst_id"],
+            "left_anti",
+        )
+    rows.write.mode("append").parquet(path)
 
 
 def overwrite_lineage(
@@ -112,9 +116,3 @@ def overwrite_lineage(
     lineage.where(F.col("op") == op).drop("op").write.mode(
         "overwrite"
     ).parquet(os.path.join(root, "lineage", f"op={op}"))
-
-
-def observed(df: DataFrame, name: str) -> DataFrame:
-    """Attach an observation (row count) readable after the action —
-    the Spark-native replacement for the reference's KV bookkeeping."""
-    return df.observe(name, F.count(F.lit(1)).alias("n_rows"))

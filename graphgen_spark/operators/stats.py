@@ -34,39 +34,41 @@ def degree_table(edges: DataFrame) -> DataFrame:
 def structure_metrics(
     nodes: DataFrame, edges: DataFrame, cc_labels: DataFrame | None = None
 ) -> dict:
-    """Whole-graph structural robustness metrics (driver-side scalars,
-    computed with three aggregate jobs)."""
-    total_nodes = nodes.count()
-    total_edges = edges.count()
+    """Whole-graph structural robustness metrics (driver-side scalars):
+    one aggregate over the degree histogram, an edge count, then the
+    largest connected component."""
+    deg = degree_table(edges)
+    with_deg = nodes.join(
+        deg, nodes.entity_name == deg.entity_name, "left"
+    ).select(F.coalesce(deg.degree, F.lit(0)).alias("degree"))
+    hist = with_deg.groupBy("degree").agg(F.count(F.lit(1)).alias("freq"))
+    pos = F.col("degree") > 0
+    # power-law R² = corr(log degree, log freq)² over the histogram rows
+    # of positive degree (the moments skip the nulls `when` leaves);
+    # from covariance and variances because Spark's corr divides by
+    # zero under ANSI when a variance is 0, where R² is undefined
+    lx, ly = F.when(pos, F.log("degree")), F.when(pos, F.log("freq"))
+    row = hist.agg(
+        F.sum("freq").alias("n"),
+        F.sum(F.when(~pos, F.col("freq")).otherwise(0)).alias("isolated"),
+        F.sum(F.col("degree") * F.col("freq")).alias("sum_degree"),
+        F.sum(F.when(pos, F.col("freq")).otherwise(0)).alias("n_pos"),
+        F.count(lx).alias("k"),
+        F.covar_pop(lx, ly).alias("cov"),
+        F.var_pop(lx).alias("var_x"),
+        F.var_pop(ly).alias("var_y"),
+    ).collect()[0]
+    total_nodes = row["n"] or 0
     if total_nodes == 0:
         return {
             "total_nodes": 0, "total_edges": 0, "noise_ratio": 0.0,
             "largest_cc_ratio": 0.0, "avg_degree": 0.0, "powerlaw_r2": None,
             "is_robust": False,
         }
-
-    deg = degree_table(edges)
-    with_deg = nodes.join(
-        deg, nodes.entity_name == deg.entity_name, "left"
-    ).select(F.coalesce(deg.degree, F.lit(0)).alias("degree"))
-    isolated = with_deg.where(F.col("degree") == 0).count()
-    sum_degree = with_deg.agg(F.sum("degree")).collect()[0][0] or 0
-
-    # power-law R²: corr(log degree, log freq)² over the degree histogram
-    hist = (
-        with_deg.where(F.col("degree") > 0)
-        .groupBy("degree")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
-    n_pos = with_deg.where(F.col("degree") > 0).count()
+    total_edges = edges.count()
     r2 = None
-    if n_pos >= 10:
-        row = hist.agg(
-            F.corr(F.log("degree"), F.log("freq")).alias("c"),
-            F.count(F.lit(1)).alias("k"),
-        ).collect()[0]
-        if row["k"] >= 3 and row["c"] is not None:
-            r2 = float(row["c"]) ** 2
+    if row["n_pos"] >= 10 and row["k"] >= 3 and row["var_x"] and row["var_y"]:
+        r2 = row["cov"] ** 2 / (row["var_x"] * row["var_y"])
 
     if cc_labels is None:
         cc_labels = connected_components(edges)
@@ -78,9 +80,9 @@ def structure_metrics(
         or 0
     )
 
-    noise_ratio = isolated / total_nodes
+    noise_ratio = row["isolated"] / total_nodes
     largest_cc_ratio = largest_cc / total_nodes
-    avg_degree = sum_degree / total_nodes
+    avg_degree = row["sum_degree"] / total_nodes
     return {
         "total_nodes": total_nodes,
         "total_edges": total_edges,

@@ -125,7 +125,10 @@ def records_to_graph(
             F.col("src_id") != F.col("tgt_id")
         )
     nodes = merge_nodes(entities_c)
-    edges = merge_edges(relations_c, nodes)
+    # the node set is the distinct entity names (see run_kg_pipeline)
+    edges = merge_edges(
+        relations_c, entities_c.select("entity_name").distinct()
+    )
     triples = relations_c.select(
         F.col("src_id").alias("subj"),
         F.col("description").alias("pred"),

@@ -1,6 +1,7 @@
 """run_kg_pipeline extracts once per call: the records table is cached
 for as long as the returned mapping lives, released when it is dropped,
-and the edge filter on entity names equals the merge_nodes filter."""
+and the edge filter on entity names (run_kg_pipeline and
+records_to_graph) equals the merge_nodes filter."""
 
 import gc
 import os
@@ -13,7 +14,11 @@ import pytest
 from graphgen_spark import synth
 from graphgen_spark.operators.merge import merge_edges, merge_nodes
 from graphgen_spark.operators.stats import coverage_by_url
-from graphgen_spark.pipelines import alias_labels, run_kg_pipeline
+from graphgen_spark.pipelines import (
+    alias_labels,
+    records_to_graph,
+    run_kg_pipeline,
+)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 N_PAGES = 40
@@ -97,6 +102,16 @@ class TestEdgeFilter:
             spark, pages, precomputed_labels=labels if linked else None,
             fused=fused, **CHUNKS,
         )
+        want = merge_edges(out["relations"], merge_nodes(out["entities"]))
+        got = rows(out["edges"])
+        assert got and got == rows(want)
+
+    @pytest.mark.parametrize("linked", [True, False])
+    def test_records_to_graph_edges_equal_merge_nodes_filter(
+        self, spark, pages, labels, linked
+    ):
+        records = run_kg_pipeline(spark, pages, **CHUNKS)["records"]
+        out = records_to_graph(records, labels if linked else None)
         want = merge_edges(out["relations"], merge_nodes(out["entities"]))
         got = rows(out["edges"])
         assert got and got == rows(want)
